@@ -201,6 +201,7 @@ def main() -> None:
             return None
 
     steal_before = _steal_ticks()
+    steal_wall0 = time.monotonic()
 
     import __spark_entry__ as entry_mod
     from flyq_spark.session import get_spark
@@ -331,6 +332,7 @@ def main() -> None:
     core21_total = round(sum(times[q] for q in core21 if q in times), 3)
     load_after = [round(x, 2) for x in os.getloadavg()]
     steal_after = _steal_ticks()
+    steal_wall_s = time.monotonic() - steal_wall0
     steal_ticks = (
         steal_after - steal_before
         if steal_before is not None and steal_after is not None
@@ -372,8 +374,11 @@ def main() -> None:
     # core-seconds stolen by the hypervisor makes the totals mush even
     # when loadavg is clean — a twin from such a window misleads every
     # later round-over-round comparison. 1 tick = 10 ms (USER_HZ=100).
-    ncpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
-    elapsed = sum(sum(r) for r in runs.values()) or 1.0
+    # Numerator and denominator cover the same window: the ticks are the
+    # /proc/stat aggregate over every online CPU between steal_before and
+    # steal_after, so divide by that window's wall time x all CPUs.
+    ncpus = os.cpu_count() or 1
+    elapsed = steal_wall_s or 1.0
     steal_frac = (
         steal_ticks / (elapsed * 100.0 * ncpus)
         if steal_ticks is not None

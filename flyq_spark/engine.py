@@ -8,7 +8,13 @@ Spark-first restatement of the FlyQ broker:
   stats on ``offset`` replace the sparse index
   (flyq-server/src/core/segment.rs:125-154);
 - produce = route + dense offset assignment + partitioned append
-  (log_engine.rs:60-70, topic.rs:76-88, partition.rs:107-142);
+  (log_engine.rs:60-70, topic.rs:76-88, partition.rs:107-142). A batch
+  held on the driver (a list of dicts — the wire server, the CLI) is
+  routed, assigned offsets and written with pyarrow on the driver,
+  starting no Spark job; a DataFrame batch is written by Spark. Both
+  give the same offsets and files. Driver-written files keep footer
+  statistics on ``offset`` (seek, recovery), ``timestamp`` (time
+  retention, offsets_for_times) and ``key`` (consume_by_key) only;
 - consume/stream = predicate-pushdown point/range scans
   (log_engine.rs:75-102, partition.rs:144-165);
 - consumer-group offsets = small JSON control state (mirrors the
@@ -36,14 +42,21 @@ from typing import Any, Iterable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flyq_spark import storage
 from flyq_spark.config import EngineConfig
 from flyq_spark.operators.offsets import assign_offsets
-from flyq_spark.operators.routing import keyed_partition, route
+from flyq_spark.operators.routing import keyed_partition, route, route_rows
 from flyq_spark.schemas import CONSUMER_OFFSETS_SCHEMA, LOG_SCHEMA, MESSAGE_SCHEMA
 
 _OFFSETS_FILE = "consumer_offsets.json"
+
+# A driver-held produce row as createDataFrame would see it: the message
+# columns plus the caller's (or arrival-order) `seq`.
+_ROW_SCHEMA = T.StructType(
+    list(MESSAGE_SCHEMA.fields) + [T.StructField("seq", T.LongType(), False)]
+)
 
 
 class UnknownTopic(KeyError):
@@ -169,6 +182,20 @@ class FlyQEngine:
         [/headers][/seq], or an iterable of dicts (small driver-side
         batches, the reference's per-message produce shape).
 
+        Where the batch is written depends only on its type:
+
+        - rows held on the driver (an iterable of dicts) are routed,
+          assigned offsets and written as parquet on the driver with
+          pyarrow — no Spark job runs (``_produce_rows``). A DataFrame
+          passed with ``collect_acks=True`` is collected and takes this
+          path too;
+        - a DataFrame is routed, assigned offsets and written by Spark,
+          with per-partition counts observed in the write job (a
+          separate groupBy job on topics of more than 64 partitions).
+
+        Both write the same files (offset-sorted, split at
+        ``max_records_per_file``) before committing the meta.
+
         Returns a list of ``(partition, offset)`` acks in seq order when
         ``collect_acks`` (default for list input), else a dict
         ``{partition: (base_offset, new_log_end_offset)}``.
@@ -182,6 +209,109 @@ class FlyQEngine:
         prev_leo = {int(k): int(v) for k, v in meta["log_end_offsets"].items()}
         rr_cursor = int(meta.get("rr_cursor", 0))
 
+        is_df = isinstance(messages, DataFrame)
+        if collect_acks is None:
+            collect_acks = not is_df
+        if is_df and not collect_acks:
+            counts, n_keyless = self._produce_df(
+                topic, messages, n, prev_leo, rr_cursor, method
+            )
+        else:
+            if is_df:
+                messages = [r.asDict() for r in messages.collect()]
+            counts, n_keyless, acks = self._produce_rows(
+                topic, messages, n, prev_leo, rr_cursor, method
+            )
+
+        # Commit point: LEO + cursor advance (partition_state.rs:27-29;
+        # cursor persistence is stronger than the reference, topic.rs:35).
+        # The cursor advances by the KEYLESS row count — the reference
+        # increments next_partition only on keyless produces
+        # (topic.rs:80-83). Caller-supplied `seq` DataFrame batches have
+        # no keyless rank (n_keyless is None) and use the documented
+        # slotted semantics: every row consumes a cycle slot, cursor +=
+        # total.
+        total = 0
+        for p, c in counts.items():
+            meta["log_end_offsets"][str(p)] = prev_leo.get(p, 0) + c
+            total += c
+        advance = total if n_keyless is None else n_keyless
+        meta["rr_cursor"] = (rr_cursor + advance) % n if n else 0
+        storage.save_topic_meta(self.base_dir, topic, meta)
+        if collect_acks:
+            return acks
+        return {
+            int(p): (prev_leo.get(int(p), 0), int(meta["log_end_offsets"][str(p)]))
+            for p in counts
+        }
+
+    def _produce_rows(
+        self, topic, messages, n, prev_leo, rr_cursor, method
+    ) -> tuple[dict[int, int], int, list[tuple[int, int]]]:
+        """The driver path: route (``route_rows``), assign dense offsets
+        (``prev_leo + rank by seq`` per partition) and write each
+        partition's files with pyarrow — the same result as ``route()`` +
+        ``assign_offsets()`` + Spark's partitioned append, with no Spark
+        job. Input is checked by PySpark's own ``createDataFrame``
+        verifier and timestamps are converted by
+        ``TimestampType.toInternal`` (naive datetimes in the process's
+        local zone), so the accepted inputs, their errors and their
+        stored values are those of a ``createDataFrame`` batch. Every
+        check and the routing run before the first file is written.
+
+        Returns (counts per partition, keyless rows, acks in seq order)."""
+        from datetime import datetime, timezone
+
+        import pyarrow as pa
+        from pyspark.sql.types import _make_type_verifier
+
+        rows = []
+        for i, m in enumerate(messages):
+            ts = m["timestamp"]
+            if isinstance(ts, (int, float)):  # epoch millis, the reference unit
+                ts = datetime.fromtimestamp(ts / 1000.0, tz=timezone.utc)
+            rows.append((m.get("key"), m["value"], ts, m.get("headers"), m.get("seq", i)))
+        verify = _make_type_verifier(_ROW_SCHEMA)
+        for row in rows:
+            verify(row)
+        internal = [_ROW_SCHEMA.toInternal(row) for row in rows]
+        keys, values, stamps, headers, seqs = (
+            map(list, zip(*internal)) if internal else ([], [], [], [], [])
+        )
+        parts = route_rows(keys, n, method=method, rr_cursor=rr_cursor)
+        n_keyless = sum(1 for k in keys if k is None or len(k) == 0)
+
+        order = sorted(range(len(seqs)), key=seqs.__getitem__)
+        offsets = [0] * len(seqs)
+        by_part: dict[int, list[int]] = {}
+        for i in order:
+            idx = by_part.setdefault(parts[i], [])
+            offsets[i] = prev_leo.get(parts[i], 0) + len(idx)
+            idx.append(i)
+
+        schema = storage.log_file_arrow_schema()
+        table = pa.Table.from_arrays(
+            [
+                pa.array(col, field.type)
+                for col, field in zip((offsets, keys, values, stamps, headers), schema)
+            ],
+            schema=schema,
+        )
+        for p, idx in by_part.items():
+            storage.write_partition_files(
+                self.base_dir, topic, p, table.take(idx),
+                self.config.max_records_per_file,
+            )
+        counts = {p: len(idx) for p, idx in by_part.items()}
+        return counts, n_keyless, [(parts[i], offsets[i]) for i in order]
+
+    def _produce_df(
+        self, topic, df, n, prev_leo, rr_cursor, method
+    ) -> tuple[dict[int, int], int | None]:
+        """The Spark path for DataFrame batches: route + assign offsets +
+        partitioned append in one write job, per-partition counts
+        observed along the way. Returns (counts per partition, keyless
+        rows or None when the caller supplied ``seq``)."""
         # INT96 timestamps (Spark's default parquet output) carry no usable
         # footer min/max stats; retention (quirk Q5) reads them. Harmless
         # no-op when the session factory already set it.
@@ -192,9 +322,10 @@ class FlyQEngine:
         except Exception:
             pass
 
-        df, is_local, n_keyless = self._as_message_df(messages)
-        if collect_acks is None:
-            collect_acks = is_local
+        for field in ("key", "headers"):
+            if field not in df.columns:
+                df = df.withColumn(field, F.lit(None).cast(MESSAGE_SCHEMA[field].dataType))
+        n_keyless = None
         if "seq" not in df.columns:
             # Arrival order for a DataFrame batch is Spark's scan order.
             # Stamp a DENSE (0..m-1) seq plus the keyless round-robin
@@ -217,24 +348,7 @@ class FlyQEngine:
                 .parquet(storage.topic_dir(self.base_dir, topic))
             )
 
-        acks = None
-        if collect_acks:
-            # small driver-side batches: materialize acks, then write the
-            # (deterministic) plan again for the data files.
-            assigned = assigned.persist()
-            try:
-                counts: dict[int, int] = {}
-                acks = []
-                for r in (
-                    assigned.select("seq", "partition", "offset").orderBy("seq").collect()
-                ):
-                    p = int(r["partition"])
-                    acks.append((p, int(r["offset"])))
-                    counts[p] = counts.get(p, 0) + 1
-                _write(assigned)
-            finally:
-                assigned.unpersist()
-        elif n <= 64:
+        if n <= 64:
             # single pass: per-partition counts ride along with the write
             # action via the Observation API — no separate count job, no
             # persist of the whole batch.
@@ -265,74 +379,7 @@ class FlyQEngine:
                 _write(assigned)
             finally:
                 assigned.unpersist()
-
-        # Commit point: LEO + cursor advance (partition_state.rs:27-29;
-        # cursor persistence is stronger than the reference, topic.rs:35).
-        # The cursor advances by the KEYLESS row count — the reference
-        # increments next_partition only on keyless produces
-        # (topic.rs:80-83). Caller-supplied `seq` batches have no keyless
-        # rank (n_keyless is None) and use the documented slotted
-        # semantics: every row consumes a cycle slot, cursor += total.
-        total = 0
-        for p, c in counts.items():
-            meta["log_end_offsets"][str(p)] = prev_leo.get(p, 0) + c
-            total += c
-        advance = total if n_keyless is None else n_keyless
-        meta["rr_cursor"] = (rr_cursor + advance) % n if n else 0
-        storage.save_topic_meta(self.base_dir, topic, meta)
-        if collect_acks:
-            return acks
-        return {
-            int(p): (prev_leo.get(int(p), 0), int(meta["log_end_offsets"][str(p)]))
-            for p in counts
-        }
-
-    def _as_message_df(self, messages) -> tuple[DataFrame, bool, int | None]:
-        """Normalize input to a message DataFrame.
-
-        Returns (df, is_local_batch, n_keyless). For local list batches the
-        rows carry dense ``seq`` (arrival order) and ``_rr`` (rank among
-        KEYLESS rows — the reference's round-robin counter, topic.rs:80-83)
-        and ``n_keyless`` is exact. DataFrame input passes through
-        (n_keyless=None; produce stamps seq/_rr if absent)."""
-        if isinstance(messages, DataFrame):
-            df = messages
-            for field in ("key", "headers"):
-                if field not in df.columns:
-                    df = df.withColumn(field, F.lit(None).cast(MESSAGE_SCHEMA[field].dataType))
-            return df, False, None
-        rows = []
-        n_keyless = 0
-        for i, m in enumerate(messages):
-            ts = m["timestamp"]
-            if isinstance(ts, (int, float)):  # epoch millis, the reference unit
-                from datetime import datetime, timezone
-
-                ts = datetime.fromtimestamp(ts / 1000.0, tz=timezone.utc)
-            key = m.get("key")
-            keyless = key is None or len(key) == 0  # quirk Q1: b"" == no key
-            rows.append(
-                Row(
-                    key=key,
-                    value=m["value"],
-                    timestamp=ts,
-                    headers=m.get("headers"),
-                    seq=m.get("seq", i),
-                    _rr=n_keyless if keyless else None,
-                )
-            )
-            if keyless:
-                n_keyless += 1
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(MESSAGE_SCHEMA.fields)
-            + [
-                T.StructField("seq", T.LongType(), False),
-                T.StructField("_rr", T.LongType(), True),
-            ]
-        )
-        return self.spark.createDataFrame(rows, schema), True, n_keyless
+        return counts, n_keyless
 
     def _with_dense_seq(self, df: DataFrame) -> tuple[DataFrame, int, int]:
         """Stamp dense scan-order ``seq`` (0..m-1) and the keyless

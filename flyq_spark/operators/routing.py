@@ -37,6 +37,9 @@ one task):
 Quirk Q1 (flyq-protocol/src/message.rs:83-92): a zero-length key decodes
 as ``None``; we treat empty keys as keyless, matching the round-trip
 behavior.
+
+``route_rows`` is the row-wise twin for batches held on the driver: the
+same assignment per method, computed in Python without a Spark job.
 """
 
 from __future__ import annotations
@@ -61,19 +64,22 @@ def is_keyless(key: Column) -> Column:
     return key.isNull() | (F.length(key) == 0)
 
 
-def _xxh3_partition_udf(n_partitions: int):
-    """Bit-exact reference routing (topic.rs:90-93): xxh3_64(key) as u32 % n.
+def _xxh3_digest():
+    """XXH3-64 of a bytes key: the C-extension ``xxhash`` package when
+    installed, else the pure-Python XXH3-64 in functions/hashing.py (same
+    bits, slower — fine for routing keys, which are short)."""
+    if HAVE_XXHASH:
+        return xxhash.xxh3_64_intdigest
+    from flyq_spark.functions.hashing import xxh3_64
 
-    Prefers the C-extension ``xxhash`` package; falls back to the
-    pure-Python XXH3-64 in functions/hashing.py (same bits, slower —
-    fine for routing keys, which are short).
-    """
+    return xxh3_64
+
+
+def _xxh3_partition_udf(n_partitions: int):
+    """Bit-exact reference routing (topic.rs:90-93): xxh3_64(key) as u32 % n."""
     from pyspark.sql.functions import pandas_udf
 
-    if HAVE_XXHASH:
-        digest = xxhash.xxh3_64_intdigest
-    else:
-        from flyq_spark.functions.hashing import xxh3_64 as digest
+    digest = _xxh3_digest()
 
     @pandas_udf("int")
     def xxh3_route(keys: pd.Series) -> pd.Series:
@@ -114,7 +120,7 @@ def route(
 
     Round-robin is always a shuffle-free projection. When the batch
     carries ``_rr`` — the dense rank among KEYLESS rows that the engine's
-    produce path stamps (engine._with_dense_seq / _as_message_df) —
+    DataFrame produce path stamps (engine._with_dense_seq) —
     keyless rows route as ``pmod(rr_cursor + _rr, n)``: bit-exact
     reference semantics, where only keyless messages advance the cycle
     (topic.rs:80-83). Without ``_rr``, `seq` itself must be dense per
@@ -147,3 +153,82 @@ def route(
             keyed_partition(F.col("key"), n_partitions, method)
         ),
     )
+
+
+# Bytes Spark's UTF8String.toLong trims from both ends: Java
+# Character.isWhitespace || isISOControl over a SIGNED byte, i.e. ASCII
+# 0x00-0x20 and 0x7F (bytes >= 0x80 are negative and never trimmed).
+_SPARK_TRIM = frozenset(range(0x21)) | {0x7F}
+
+
+def _spark_cast_binary_to_long(key: bytes) -> int:
+    """``cast(cast(key as string) as long)`` under Spark's default ANSI
+    mode, byte for byte: the binary->string cast keeps the raw bytes, the
+    string->long cast trims ``_SPARK_TRIM`` bytes, takes one optional
+    sign and then only ASCII digits (no decimal point under ANSI), and
+    rejects anything outside the signed 64-bit range. Raises
+    ``NumberFormatException`` (CAST_INVALID_INPUT) where Spark raises."""
+    lo, hi = 0, len(key)
+    while lo < hi and key[lo] in _SPARK_TRIM:
+        lo += 1
+    while hi > lo and key[hi - 1] in _SPARK_TRIM:
+        hi -= 1
+    body = bytes(key[lo:hi])
+    digits = body[1:] if body[:1] in (b"+", b"-") else body
+    if digits and all(0x30 <= b <= 0x39 for b in digits):
+        value = int(digits)
+        if body[:1] == b"-":
+            value = -value
+        if -(1 << 63) <= value < (1 << 63):
+            return value
+    from pyspark.errors import NumberFormatException
+
+    raise NumberFormatException(
+        message=f"[CAST_INVALID_INPUT] The value {bytes(key)!r} of the type "
+        '"BINARY" cannot be cast to "BIGINT" because it is malformed.'
+    )
+
+
+def route_rows(
+    keys: list,
+    n_partitions: int,
+    method: str = "xxhash64",
+    rr_cursor: int = 0,
+) -> list[int]:
+    """Row-wise ``route()`` for a batch held on the driver: one partition
+    per key, in arrival order, with no Spark job.
+
+    Same assignment as ``route()`` on a batch stamped with ``_rr``:
+    keyless rows (quirk Q1: ``None`` or ``b""``) take
+    ``(rr_cursor + rank among keyless rows) % n``; keyed rows take
+    ``pmod(xxhash64(key), n)``, ``(xxh3_64(key) & 0xFFFFFFFF) % n`` or
+    ``pmod(cast(cast(key as string) as long), n)`` by ``method``.
+    ``n == 1`` routes every row to 0 without hashing, as ``route()``
+    does."""
+    if method not in ROUTING_METHODS:
+        raise ValueError(
+            f"unknown routing method {method!r}; expected one of {ROUTING_METHODS}"
+        )
+    if n_partitions == 1:
+        return [0] * len(keys)
+    if method == "xxhash64":
+        from flyq_spark.functions.hashing import spark_partition_for_key as keyed
+    elif method == "xxh3":
+        digest = _xxh3_digest()
+
+        def keyed(k, n):
+            return (digest(bytes(k)) & 0xFFFFFFFF) % n
+    else:
+
+        def keyed(k, n):
+            return _spark_cast_binary_to_long(k) % n
+
+    out = []
+    rr = int(rr_cursor)
+    for k in keys:
+        if k is None or len(k) == 0:
+            out.append(rr % n_partitions)
+            rr += 1
+        else:
+            out.append(keyed(k, n_partitions))
+    return out

@@ -13,17 +13,21 @@ segment lookup (flyq-server/src/core/partition.rs:148-158):
       _meta/consumer_offsets.parquet
 
 Metadata writes are atomic tmp+rename, same discipline as the reference's
-PartitionMeta::save (flyq-server/src/core/partiton_meta.rs:27-40).
+PartitionMeta::save (flyq-server/src/core/partiton_meta.rs:27-40); so are
+the data files the engine writes on the driver (``write_partition_files``).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import uuid
 from dataclasses import dataclass
 from datetime import timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 TOPIC_PREFIX = "topic_"
@@ -73,6 +77,53 @@ def list_topics(base_dir: str) -> list[str]:
     return out
 
 
+@functools.cache
+def log_file_arrow_schema() -> pa.Schema:
+    """Arrow schema of one log data file: the ``LOG_SCHEMA`` columns
+    without the hive ``partition`` column, timestamps as
+    ``timestamp[us, tz=UTC]`` (what Spark writes under
+    ``outputTimestampType=TIMESTAMP_MICROS``)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from flyq_spark.schemas import LOG_SCHEMA
+
+    return to_arrow_schema(
+        T.StructType([f for f in LOG_SCHEMA.fields if f.name != "partition"])
+    )
+
+
+def write_partition_files(
+    base_dir: str, topic: str, partition: int, table: pa.Table,
+    max_records_per_file: int,
+) -> None:
+    """Write one partition's rows as log data files, the way Spark's
+    partitioned append lays them out: sorted by offset, one file per
+    ``max_records_per_file`` rows, snappy. Footer statistics are kept
+    only where a reader uses them: ``offset`` (seek, recovery),
+    ``timestamp`` (time retention, ``offsets_for_times``) and ``key``
+    (``consume_by_key``); dictionary encoding only on ``key``. Each file
+    is written under a dot-prefixed name and renamed into place, so a
+    reader (Spark, pyarrow datasets, ``partition_file_stats``) never
+    lists a half-written file."""
+    pdir = partition_dir(base_dir, topic, partition)
+    os.makedirs(pdir, exist_ok=True)
+    table = table.sort_by("offset")
+    step = max(1, int(max_records_per_file))
+    for start in range(0, table.num_rows, step):
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(pdir, f".{name}.tmp")
+        pq.write_table(
+            table.slice(start, step),
+            tmp,
+            compression="snappy",
+            use_dictionary=["key"],
+            write_statistics=["offset", "key", "timestamp"],
+            store_schema=False,
+        )
+        os.replace(tmp, os.path.join(pdir, name))
+
+
 @dataclass
 class FileStats:
     """Per-parquet-file stats — the Spark analog of a FlyQ Segment
@@ -110,7 +161,8 @@ def partition_file_stats(base_dir: str, topic: str, partition: int) -> list[File
     if not os.path.isdir(pdir):
         return out
     for name in sorted(os.listdir(pdir)):
-        if not name.endswith(".parquet"):
+        # dot/underscore names are in-flight writes and Spark side files
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
             continue
         path = os.path.join(pdir, name)
         f = pq.ParquetFile(path)
